@@ -3,8 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, CodegenFallback}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Generator, JsonToStructs, TimeZoneAwareExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.trees.TreePattern
+import org.apache.spark.sql.catalyst.trees.TreePattern.TreePattern
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.util.{ArrayData, BadRecordException, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -347,6 +351,80 @@ case class TokenChunkSlices(start: Expression, n: Expression, budget: Expression
     copy(start = cs(0), n = cs(1), budget = cs(2))
 }
 
+/** One JSON parse per text line for the line-oriented ingest paths
+  * (IotPipeline.readSensors and its streaming twin). Emits, per
+  * non-blank line, `is_object` (the line is a well-formed JSON object)
+  * and `parsed` (the line read as `schema`) — exactly what the pair
+  * `from_json(line, map<string,string>).isNotNull` and
+  * `from_json(line, schema)` return. Lines that are null or made only of
+  * whitespace (Python's `str.isspace` set, not just the spaces `trim`
+  * strips) emit no row.
+  *
+  * Fast path: Spark's own JacksonParser for `schema`, run once over a
+  * String-backed Jackson parser — no per-line InputStreamReader. A line
+  * it parses into a row without error is an object, and that row is what
+  * `from_json` returns. String-backed, not byte-backed, on purpose: under
+  * `spark.sql.json.enableExactStringParsing` a byte-backed parser keeps
+  * a nested object in a string field as raw text, where `from_json`
+  * re-serializes it. Every other line (malformed, not an object, a field
+  * of the wrong type, an unparseable timestamp) goes through the two
+  * original JsonToStructs expressions, so both outputs equal the old ones
+  * by construction and the slow path costs only on bad lines.
+  *
+  * A Generator, not a struct-valued expression: Catalyst keeps filters
+  * on a Generate's output above it, so a filter on `is_object` or on a
+  * parsed field can never be pushed below the projection as another
+  * copy of the parse — each job parses a line exactly once. */
+case class ParseJsonLine(child: Expression, schema: StructType,
+    timeZoneId: Option[String] = None)
+    extends UnaryExpression with Generator with TimeZoneAwareExpression with CodegenFallback {
+  override def prettyName: String = "parse_json_line"
+  // TimeZoneAwareExpression's node patterns shadow Generator's; without
+  // GENERATOR the analyzer never extracts this into a Generate
+  override def nodePatternsInternal(): Seq[TreePattern] = Seq(TreePattern.GENERATOR)
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("is_object", BooleanType, nullable = false),
+    StructField("parsed", slowParsed.dataType)))
+
+  @transient private lazy val fastParser = new JacksonParser(schema,
+    new JSONOptions(Map.empty[String, String], timeZoneId.get,
+      SQLConf.get.getConf(SQLConf.COLUMN_NAME_OF_CORRUPT_RECORD)),
+    allowArrayAsStructs = false)
+  @transient private lazy val slowIsObject =
+    JsonToStructs(MapType(StringType, StringType), Map.empty, child, timeZoneId)
+  @transient private lazy val slowParsed = JsonToStructs(schema, Map.empty, child, timeZoneId)
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val line = child.eval(input)
+    if (line == null) return Nil
+    val text = line.toString
+    if (ParseJsonLine.isBlank(text)) return Nil
+    val rows = try fastParser.parse(text, CreateJacksonParser.string, UTF8String.fromString).iterator
+      catch { case _: BadRecordException => Iterator.empty }
+    if (rows.hasNext) Iterator.single(InternalRow(true, rows.next()))
+    else Iterator.single(InternalRow(slowIsObject.eval(input) != null, slowParsed.eval(input)))
+  }
+
+  override def withTimeZone(tz: String): TimeZoneAwareExpression = copy(timeZoneId = Some(tz))
+
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+object ParseJsonLine {
+  /** Python's `not line.strip()`: every char is whitespace in the
+    * `str.isspace` sense (Java's whitespace, the no-break spaces, NEL). */
+  def isBlank(s: String): Boolean = {
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (!(Character.isWhitespace(c) || Character.isSpaceChar(c) || c == '\u0085')) return false
+      i += 1
+    }
+    true
+  }
+}
+
 /** Column-API entry points + SQL registration for the custom kernels. */
 object GraftExpressions {
   import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
@@ -362,6 +440,8 @@ object GraftExpressions {
   def ngrams(tokens: Column, n: Int): Column = toColumn(NGrams(toExpression(tokens), n))
   def token_chunk_slices(start: Column, n: Column, budget: Column): Column =
     toColumn(TokenChunkSlices(toExpression(start), toExpression(n), toExpression(budget)))
+  def parse_json_line(line: Column, schema: StructType): Column =
+    toColumn(ParseJsonLine(toExpression(line), schema))
 
   /** Expose the kernels to SQL users of the session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

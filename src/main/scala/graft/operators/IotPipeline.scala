@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.GraftExpressions
 import java.nio.file.{Files, Paths, Path}
 
 /** The reference pipeline (SURVEY.md §2.1/§2.2), rebuilt Spark-first.
@@ -37,26 +38,35 @@ object IotPipeline {
     StructField("pressure", DoubleType),
     StructField("timestamp", TimestampType)))
 
-  /** O1/O2/O3: JSONL scan as text + `from_json`. One pass, no caching:
-    * the raw line rides alongside the parsed struct, so the bad-record
-    * side output (O11) keeps the original bytes — Spark's JSON source
-    * can't serve a corrupt-only projection without caching the scan,
-    * which is a non-starter at 100 TB.
-    *
-    * Two parses per line, both codegen'd, zero extra I/O:
-    *  - `is_object`: `from_json` to map<string,string> — non-null iff
-    *    the line is a well-formed JSON *object* (the reference's is-dict
-    *    guard, `app/app.py:43-45`; malformed JSON `app/app.py:62-63`).
+  /** O1/O2/O3: JSONL scan as text + one JSON parse per line
+    * ([[parseSensorLines]]). One pass, no caching: the raw line rides
+    * alongside the parsed struct, so the bad-record side output (O11)
+    * keeps the original bytes — Spark's JSON source can't serve a
+    * corrupt-only projection without caching the scan, which is a
+    * non-starter at 100 TB. */
+  def readSensors(spark: SparkSession, path: String): DataFrame =
+    parseSensorLines(spark.read.text(path))
+
+  /** The parse shared by the batch and streaming paths: text lines
+    * (`value`) → (`value`, `is_object`, `parsed`), one Jackson parse per
+    * line per job through the [[graft.functions.ParseJsonLine]] kernel.
+    *  - `is_object`: the line is a well-formed JSON *object* (the
+    *    reference's is-dict guard, `app/app.py:43-45`; malformed JSON
+    *    `app/app.py:62-63`).
     *  - `parsed`: typed struct parse; a type-mismatched field nulls just
     *    that field, keeping the record (`app/app.py:57-58` semantics —
     *    a string temperature must NOT drop the row).
-    * Empty/whitespace lines are skipped (`app/app.py:35-37`). */
-  def readSensors(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-      .filter(trim(col("value")) =!= "")
-      .withColumn("is_object",
-        from_json(col("value"), MapType(StringType, StringType)).isNotNull)
-      .withColumn("parsed", from_json(col("value"), sensorSchema))
+    * Both equal `from_json(value, map<string,string>).isNotNull` and
+    * `from_json(value, sensorSchema)` row for row (IotPipelineSpec's
+    * differential test); only bad lines pay for the second parse.
+    * Empty and whitespace-only lines are skipped (`app/app.py:35-37`).
+    *
+    * The kernel is a Generator because Catalyst keeps filters on a
+    * Generate's output above it, while filters on `from_json` columns
+    * (`is_object`, `temperature > threshold`) are pushed below the
+    * projection as further copies of the parse. */
+  def parseSensorLines(lines: DataFrame): DataFrame =
+    lines.select(col("value"), GraftExpressions.parse_json_line(col("value"), sensorSchema))
 
   /** O4 + O11: split into (good, bad). Bad = unparseable or non-object,
     * preserved verbatim for the dead-letter output. */

@@ -38,19 +38,14 @@ case class RunningProfileState(n_events: Long, sum_value: Double,
 object Streams {
 
   /** O1/O9 streaming twin: continuously discover new JSONL files in
-    * `inDir` and run the full IoT transform on each micro-batch (same
-    * text + from_json split as the batch path). */
+    * `inDir` and run the full IoT transform on each micro-batch — the
+    * batch path's own parse ([[IotPipeline.parseSensorLines]]) over a
+    * streaming text source. */
   def sensorFileStream(spark: SparkSession, inDir: String): DataFrame = {
-    val raw = spark.readStream
+    val lines = spark.readStream
       .option("maxFilesPerTrigger", 16) // bound micro-batch size at scale
       .text(inDir)
-      .filter(trim(col("value")) =!= "")
-      .withColumn("is_object", from_json(col("value"),
-        org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.StringType)).isNotNull)
-      .withColumn("parsed", from_json(col("value"), IotPipeline.sensorSchema))
-    IotPipeline.transform(raw.filter(col("is_object")).select(col("parsed.*")))
+    IotPipeline.transform(IotPipeline.splitCorrupt(IotPipeline.parseSensorLines(lines))._1)
   }
 
   /** Drain-the-directory batch-of-streams run (Trigger.AvailableNow):

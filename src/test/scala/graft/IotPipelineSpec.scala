@@ -1,6 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType}
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
+import graft.functions.ParseJsonLine
 import graft.operators.IotPipeline
 import java.nio.file.{Files, Paths}
 
@@ -103,13 +108,97 @@ class IotPipelineSpec extends SparkSuite {
   }
 
   test("empty input still writes an (empty) output — app.py:69-80 parity") {
-    val in = writeJsonl("empty.jsonl", Seq(""))
+    // blank lines are skipped, not dead-lettered: the reference skips
+    // every line whose str.strip() is empty (app.py:35-37), so tabs, form
+    // feeds, vertical tabs, NEL and no-break spaces count as blank too
+    val blanks = Seq("", "   ", "\t", " \t ", "\f", "\u000b", "\u0085", "\u00a0 \u3000", "\u001f")
+    val in = writeJsonl("empty.jsonl", blanks)
     val raw = IotPipeline.readSensors(spark, in)
-    val (good, _) = IotPipeline.splitCorrupt(raw)
+    val (good, bad) = IotPipeline.splitCorrupt(raw)
+    assert(bad.count() === 0)
     val outDir = Files.createTempDirectory("iot-empty-out").toString
     IotPipeline.writeJsonl(IotPipeline.transform(good), outDir)
     assert(Files.exists(Paths.get(outDir, "_SUCCESS")))
     assert(spark.read.schema(IotPipeline.sensorSchema).json(outDir).count() === 0)
+  }
+
+  /** `is_object` and `parsed` as two `from_json` columns: the reference
+    * the shared parse must equal row for row. */
+  private def fromJsonReference(lines: DataFrame): DataFrame =
+    lines
+      .withColumn("is_object", from_json($"value", MapType(StringType, StringType)).isNotNull)
+      .withColumn("parsed", from_json($"value", IotPipeline.sensorSchema))
+
+  private def assertSameAsFromJson(name: String, lines: Seq[String]): Unit = {
+    assert(!lines.exists(ParseJsonLine.isBlank), "blank lines are skipped, not compared")
+    val path = writeJsonl(name, lines)
+    def rows(df: DataFrame): Seq[(String, Boolean, String)] =
+      df.select($"value", $"is_object", to_json($"parsed")).as[(String, Boolean, String)]
+        .collect().toSeq.sorted
+    val got = rows(IotPipeline.readSensors(spark, path))
+    val want = rows(fromJsonReference(spark.read.text(path)))
+    assert(got.size === lines.size)
+    val diffs = got.zip(want).filter { case (g, w) => g != w }
+    assert(diffs.isEmpty, s"${diffs.size} differences, first: ${diffs.take(3)}")
+  }
+
+  test("shared parse equals the two from_json columns on the edge corpus") {
+    val ts = "2025-07-11T11:00:00Z"
+    val edge = Seq(
+      """[1, 2]""", "\"str\"", "42", "null", "true", "{}", """[{"device_id": "s"}]""",
+      """{"device_id": "s", "temperature": 2""", """{"device_id": "s", "temp""", "{",
+      """{"a": 1} x""", """{"a": 1}{"b": 2}""", """{"a": 1},""",
+      """{"device_id": "s", "device_id": "t", "temperature": 1, "temperature": 2}""",
+      """{"temperature": NaN}""", """{"temperature": Infinity, "humidity": -Infinity}""",
+      """{"temperature": "NaN", "humidity": "Infinity"}""",
+      """{'device_id': 's', 'temperature': 20}""", """{"device_id": "s", "temperature": 20,}""",
+      """{"device_id": "s", "temperature": tru, "humidity": 40}""",
+      """{"device_id": {"x": 1}, "location": [1, {"y": "z"}], "temperature": 20}""",
+      """{"device_id": "s", "temperature": "hot"}""", """{"device_id": "s", "temperature": true}""",
+      """{"device_id": "s", "temperature": 20, "timestamp": "not a time"}""",
+      """{"device_id": "s", "timestamp": "2025-07-11 11:00:00"}""",
+      """{"device_id": "s", "timestamp": "2025-07-11T11:00:00.123456+02:00"}""",
+      """{"device_id": "s", "timestamp": "2025-07-11"}""", """{"device_id": "s", "timestamp": 1720000000}""",
+      """{"device_id": "capteur-é", "location": "Zürich 東京 🌡", "temperature": 21.5}""",
+      "{\"device_id\": \"\\u00e9\\n\\\"q\\\"\", \"location\": \"\\ud83c\\udf21\", \"temperature\": 1e400}",
+      """{"device_id": "s", "location": "bad \x escape"}""",
+      """{"device_id": null, "temperature": null, "humidity": -0, "pressure": 007}""",
+      """{"Temperature": 20, "DEVICE_ID": "s"}""", """{device_id: "s"}""",
+      """{"device_id": "s", /* c */ "temperature": 20}""",
+      s"""{"device_id": "s", "extra": ${"9" * 1200}, "temperature": 20, "timestamp": "$ts"}""",
+      s"""{"device_id": "s", "temperature": ${"9" * 1200}}""",
+      """{"device_id": "s", "nested": {"a": [1, 2, {"b": null}]}, "temperature": 1.5e3}""",
+      """  {"device_id": "padded", "temperature": 20}  """,
+      s"""{"device_id": "s", "temperature": 20, "timestamp": "$ts"} """) ++ IotPipeline.fixtureA ++
+      IotPipeline.fixtureB
+    assertSameAsFromJson("differential-edge.jsonl", edge)
+  }
+
+  test("shared parse equals the two from_json columns on a seeded one-char mutation fuzz") {
+    // valid sensor lines, each hit by one delete / insert / replace of a
+    // JSON-significant (or non-ASCII) character; seeded, so the same
+    // 12 000 lines every run
+    val alphabet = "{}[]\":,.-+0123456789eEtrufalsnNI \\'x/é中".toVector
+    val valid: Gen[String] = for {
+      dev <- Gen.choose(0, 999)
+      temp <- Gen.oneOf(Gen.choose(-50.0, 60.0).map(t => f"$t%.1f"), Gen.choose(-50, 60).map(_.toString))
+      hum <- Gen.choose(0.0, 120.0)
+      sec <- Gen.choose(0, 86399)
+    } yield f"""{"device_id": "dev-$dev%03d", "location": "site-${dev % 7}", "temperature": $temp, """ +
+      f""""humidity": $hum%.1f, "pressure": 1012.5, "timestamp": "2025-07-11T${sec / 3600}%02d:""" +
+      f"""${sec / 60 % 60}%02d:${sec % 60}%02dZ"}"""
+    val mutated: Gen[String] = for {
+      line <- valid
+      at <- Gen.choose(0, line.length - 1)
+      op <- Gen.choose(0, 2)
+      c <- Gen.oneOf(alphabet)
+    } yield op match {
+      case 0 => line.patch(at, Nil, 1)
+      case 1 => line.patch(at, Seq(c), 0)
+      case _ => line.patch(at, Seq(c), 1)
+    }
+    val lines = Gen.listOfN(12000, mutated).pureApply(Gen.Parameters.default, Seed(20261017L))
+    assertSameAsFromJson("differential-fuzz.jsonl", lines)
   }
 
   test("humidity validation flags out-of-range but keeps records (README.md:9)") {

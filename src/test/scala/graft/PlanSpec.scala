@@ -1,6 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.{FormattedMode, GenerateExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import graft.functions.ParseJsonLine
+import graft.operators.IotPipeline
 
 /** Physical-plan shape assertions: the scale story is only real if the
   * optimizer actually produces the plans the design assumes. These pin
@@ -750,5 +755,28 @@ class PlanSpec extends SparkSuite {
     val p = plan("samp_borda_fusion")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"))
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("iot ingest: each job parses a line once — one parse_json_line Generate, no from_json") {
+    // a filter on a from_json column is pushed below the projection as
+    // another parse; the Generate keeps is_object and the threshold above
+    object aqe extends AdaptiveSparkPlanHelper
+    import spark.implicits._
+    val raw = IotPipeline.readSensors(spark, IotPipeline.materializeFixtures())
+    val (good, bad) = IotPipeline.splitCorrupt(raw)
+    val dim = Seq(("sensor-alpha", 101), ("sensor-001", 1)).toDF("device_id", "location_id")
+    val goodPath = IotPipeline.enrichLocation(
+      IotPipeline.thresholdFilter(IotPipeline.transform(good)), dim)
+    def check(name: String, df: DataFrame): Unit = {
+      val p = df.queryExecution.executedPlan
+      val gens = aqe.collect(p) { case g: GenerateExec if g.generator.isInstanceOf[ParseJsonLine] => g }
+      assert(gens.size === 1, s"$name: ${gens.size} parse_json_line Generates")
+      val reparses = aqe.flatMap(p)(_.expressions.flatMap(_.collect { case j: JsonToStructs => j }))
+      assert(reparses.isEmpty, s"$name: JsonToStructs in the plan")
+      val text = df.queryExecution.explainString(FormattedMode)
+      assert(!text.contains("from_json") && !text.contains("JsonToStructs"), s"$name:\n$text")
+    }
+    check("good path", goodPath)
+    check("dead letter", bad)
   }
 }

@@ -38,6 +38,30 @@ class StreamingSpec extends SparkSuite {
     assert(out2.count() === 9) // 5 + 4 good records; corrupt line dropped
   }
 
+  test("sensor stream equals the batch path row for row (shared parse)") {
+    val inDir = Files.createTempDirectory("parity-in").toString
+    val outDir = Files.createTempDirectory("parity-out").toString
+    val ckDir = Files.createTempDirectory("parity-ck").toString
+    val lines = IotPipeline.fixtureA ++ IotPipeline.fixtureB ++ Seq(
+      """{"device_id": "trunc", "temperature": 2""", "[1, 2]", "42", "null",
+      """{"device_id": "hot", "temperature": "hot", "humidity": 50}""",
+      """{"device_id": "when", "temperature": 12.5, "timestamp": "not a time"}""",
+      "", "   ", "\t", " \t ", "\f",
+      """{"device_id": "dup", "temperature": 11, "temperature": 13}""")
+    Files.writeString(java.nio.file.Paths.get(inDir, "mixed.jsonl"), lines.mkString("\n") + "\n")
+    val batch = IotPipeline.transform(
+      IotPipeline.splitCorrupt(IotPipeline.readSensors(spark, inDir))._1)
+    val q = Streams.runAvailableNow(Streams.sensorFileStream(spark, inDir), outDir, ckDir)
+    q.awaitTermination(60000)
+    val cols = batch.columns.filter(_ != "processed_timestamp").toSeq
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.map(String.valueOf)).toSeq
+        .sortBy(_.mkString("\u0001"))
+    val streamed = rows(spark.read.schema(batch.schema).json(outDir))
+    assert(streamed.size === 12)
+    assert(streamed === rows(batch))
+  }
+
   test("windowed streaming agg equals its batch twin on the same data") {
     val events = MemoryStream[Ev](spark, 1)
     val rows = Seq(
