@@ -17,136 +17,32 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     IotPipeline.flagship(spark)
 
+  /** Every operator module, once. A new module is one more line here;
+    * a name it shares with another module fails at first access. */
+  lazy val modules: Seq[QueryModule] = Seq(
+    RelationalQueries, RelationalQueries2, StreamingQueries, SamplingQueries,
+    graft.sources.SourceQueries, graft.sources.AcidQueries, IotQueries,
+    TextQueries, DedupQueries, SimilarityQueries, SimilarityQueries2,
+    MultimodalQueries, AsOfJoin, RelationalQueries3, RelationalQueries4,
+    RelationalQueries5, RelationalQueries6, RelationalQueries7,
+    RelationalQueries8, RelationalQueries9, GraphQueries, TextQueries2,
+    RelationalQueries10, GraphQueries2, MlQueries, TextQueries3,
+    RelationalQueries11, MlQueries2, RelationalQueries12, TextQueries4,
+    RelationalQueries13, TextQueries5, RelationalQueries14, DedupQueries2,
+    RelationalQueries15, DedupQueries3, MlQueries3, TextQueries6,
+    RelationalQueries16, MlQueries4, FeatureQueries, RelationalQueries17,
+    MlQueries5, GraphQueries3, TextQueries7, RelationalQueries18, MlQueries6,
+    DedupQueries4, TextQueries8, GraphQueries4, GraphQueries5,
+    RelationalQueries19, MlQueries7, RelationalQueries20, TextQueries9,
+    RelationalQueries21, MlQueries8, TextQueries10, TextQueries11,
+    DedupQueries5, DedupQueries6, CurationQueries, RelationalQueries22)
+
+  private lazy val registry = QueryModule.merge(modules)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    RelationalQueries.queries ++
-      RelationalQueries2.queries ++
-      StreamingQueries.queries ++
-      SamplingQueries.queries ++
-      graft.sources.SourceQueries.queries ++
-      graft.sources.AcidQueries.queries ++
-      IotQueries.queries ++
-      TextQueries.queries ++
-      DedupQueries.queries ++
-      SimilarityQueries.queries ++
-      SimilarityQueries2.queries ++
-      MultimodalQueries.queries ++
-      AsOfJoin.queries ++
-      RelationalQueries3.queries ++
-      RelationalQueries4.queries ++
-      RelationalQueries5.queries ++
-      RelationalQueries6.queries ++
-      RelationalQueries7.queries ++
-      RelationalQueries8.queries ++
-      RelationalQueries9.queries ++
-      GraphQueries.queries ++
-      TextQueries2.queries ++
-      RelationalQueries10.queries ++
-      GraphQueries2.queries ++
-      MlQueries.queries ++
-      TextQueries3.queries ++
-      RelationalQueries11.queries ++
-      MlQueries2.queries ++
-      RelationalQueries12.queries ++
-      TextQueries4.queries ++
-      RelationalQueries13.queries ++
-      TextQueries5.queries ++
-      RelationalQueries14.queries ++
-      DedupQueries2.queries ++
-      RelationalQueries15.queries ++
-      DedupQueries3.queries ++
-      MlQueries3.queries ++
-      TextQueries6.queries ++
-      RelationalQueries16.queries ++
-      MlQueries4.queries ++
-      FeatureQueries.queries ++
-      RelationalQueries17.queries ++
-      MlQueries5.queries ++
-      GraphQueries3.queries ++
-      TextQueries7.queries ++
-      RelationalQueries18.queries ++
-      MlQueries6.queries ++
-      DedupQueries4.queries ++
-      TextQueries8.queries ++
-      GraphQueries4.queries ++
-      GraphQueries5.queries ++
-      RelationalQueries19.queries ++
-      MlQueries7.queries ++
-      RelationalQueries20.queries ++
-      TextQueries9.queries ++
-      RelationalQueries21.queries ++
-      MlQueries8.queries ++
-      TextQueries10.queries ++
-      TextQueries11.queries ++
-      DedupQueries5.queries ++
-      DedupQueries6.queries ++
-      CurationQueries.queries ++
-      RelationalQueries22.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    RelationalQueries.oracles ++
-      RelationalQueries2.oracles ++
-      StreamingQueries.oracles ++
-      SamplingQueries.oracles ++
-      graft.sources.SourceQueries.oracles ++
-      graft.sources.AcidQueries.oracles ++
-      IotQueries.oracles ++
-      TextQueries.oracles ++
-      DedupQueries.oracles ++
-      SimilarityQueries.oracles ++
-      SimilarityQueries2.oracles ++
-      MultimodalQueries.oracles ++
-      AsOfJoin.oracles ++
-      RelationalQueries3.oracles ++
-      RelationalQueries4.oracles ++
-      RelationalQueries5.oracles ++
-      RelationalQueries6.oracles ++
-      RelationalQueries7.oracles ++
-      RelationalQueries8.oracles ++
-      RelationalQueries9.oracles ++
-      GraphQueries.oracles ++
-      TextQueries2.oracles ++
-      RelationalQueries10.oracles ++
-      GraphQueries2.oracles ++
-      MlQueries.oracles ++
-      TextQueries3.oracles ++
-      RelationalQueries11.oracles ++
-      MlQueries2.oracles ++
-      RelationalQueries12.oracles ++
-      TextQueries4.oracles ++
-      RelationalQueries13.oracles ++
-      TextQueries5.oracles ++
-      RelationalQueries14.oracles ++
-      DedupQueries2.oracles ++
-      RelationalQueries15.oracles ++
-      DedupQueries3.oracles ++
-      MlQueries3.oracles ++
-      TextQueries6.oracles ++
-      RelationalQueries16.oracles ++
-      MlQueries4.oracles ++
-      FeatureQueries.oracles ++
-      RelationalQueries17.oracles ++
-      MlQueries5.oracles ++
-      GraphQueries3.oracles ++
-      TextQueries7.oracles ++
-      RelationalQueries18.oracles ++
-      MlQueries6.oracles ++
-      DedupQueries4.oracles ++
-      TextQueries8.oracles ++
-      GraphQueries4.oracles ++
-      GraphQueries5.oracles ++
-      RelationalQueries19.oracles ++
-      MlQueries7.oracles ++
-      RelationalQueries20.oracles ++
-      TextQueries9.oracles ++
-      RelationalQueries21.oracles ++
-      MlQueries8.oracles ++
-      TextQueries10.oracles ++
-      TextQueries11.oracles ++
-      DedupQueries5.oracles ++
-      DedupQueries6.oracles ++
-      CurationQueries.oracles ++
-      RelationalQueries22.oracles
+  lazy val oracleSql: Map[String, String] = registry._2
 }

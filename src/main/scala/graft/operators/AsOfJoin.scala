@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -22,9 +22,7 @@ import graft.OracleParity._
   * task is a single LOCF register per payload column, and skewed keys
   * split fine under AQE because the window is per-key independent.
   */
-object AsOfJoin {
-  type Q = (SparkSession, String) => DataFrame
-
+object AsOfJoin extends graft.QueryModule {
   /** Backward as-of join: for each `left` row, attach the most recent
     * `right` row with `rightTime` <= `leftTime` on the same `keys`
     * (left rows with no prior right row get nulls — ASOF LEFT JOIN

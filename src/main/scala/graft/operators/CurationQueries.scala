@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -38,9 +37,7 @@ import graft.functions.TextFunctions.tokens
   * would come from GlobalRank's range-partitioned two-pass rank per
   * language — the boundary is two exact integers either way).
   */
-object CurationQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object CurationQueries extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // CCNET LM BUCKETS — per-language head/middle/tail split by LM
     // familiarity. Per-doc score: mean over the doc's bigrams of the

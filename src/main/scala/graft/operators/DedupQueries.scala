@@ -14,9 +14,7 @@ import graft.functions.TextFunctions._
   * partial — never an O(n²) cross join. At 100 TB the band/shingle
   * explode is the only data amplification and it's bounded per doc.
   */
-object DedupQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQueries extends graft.QueryModule {
   /** doc_id + distinct 3-token shingles. The corpus arrives as one
     * parquet row group (single scan task); shingling is CPU-dense, so
     * spread it across the cores before computing — at 100 TB the same

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
@@ -21,9 +20,7 @@ import graft.Tables._
   * doc→source map. Jaccard values are milli-floored per pair (exact,
   * both engines compute identical fold doubles) before any Σ.
   */
-object DedupQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQueries2 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   val queries: Map[String, Q] = Map(

@@ -34,9 +34,7 @@ import graft.functions.TextFunctions.minhashSignature
   * estimate at test scale; at 100 TB a deployment keeps only the
   * sketch side.
   */
-object DedupQueries3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQueries3 extends graft.QueryModule {
   private val AnchorTokens = 8
   private val AnchorDfCap = 64
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -29,9 +28,7 @@ import graft.Tables._
   * the verify stage is O(pairs)·const forever, and the text prefixes
   * join in by doc key — full documents never ride the pair shuffle.
   */
-object DedupQueries4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQueries4 extends graft.QueryModule {
   /** Prefix cap for the edit-distance DP (chars). */
   private val PrefixChars = 160
 

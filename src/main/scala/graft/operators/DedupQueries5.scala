@@ -41,9 +41,7 @@ import graft.Tables._
   * corpus-keyed. Oracle: DuckDB recursive reach closure over the
   * identical integer pairs (the `sim_cluster_reps` pattern).
   */
-object DedupQueries5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQueries5 extends graft.QueryModule {
   /** IVF cells for the semantic-dedup index (seeds = vec_id < 8). */
   private val SemCells = 8
 

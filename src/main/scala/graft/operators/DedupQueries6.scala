@@ -50,9 +50,7 @@ import graft.Tables._
   * cap at one count row in stage 2 and fan back out only to the docs
   * that actually carry them.
   */
-object DedupQueries6 {
-  type Q = (SparkSession, String) => DataFrame
-
+object DedupQueries6 extends graft.QueryModule {
   /** Minimum duplicated span length in tokens (Lee et al. use 50 BPE
     * tokens at web scale; 8 whitespace tokens matches this corpus's
     * short synthetic docs and the dedup_repeated_ngrams gram width). */

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -32,9 +31,7 @@ import graft.Tables._
   * shuffles on a row key. Group-stat products that could outgrow
   * BIGINT (Σx·Σx) are formed in DOUBLE on both engines.
   */
-object FeatureQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object FeatureQueries extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Per-language z-score of document length: one lang-sized stats
     // aggregate broadcasts back; z = (n·x − Σx)/sqrt((n·Σx² − Σx²̂)·n/(n−1))

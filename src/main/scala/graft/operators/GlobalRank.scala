@@ -58,7 +58,6 @@ object GlobalRank {
     * Callers own the sizing argument; document it at the call site. */
   def withRank(df: DataFrame, rankCol: String, sortExprs: Seq[Column],
       nParts: Int): (DataFrame, Long) = {
-    val s = df.sparkSession
     val keyed = df
       .repartitionByRange(nParts, sortExprs: _*)
       .withColumn("_gr_pid", spark_partition_id())
@@ -103,7 +102,6 @@ object GlobalRank {
     * aggregated input actually needs. */
   def withPrefixSum(df: DataFrame, cumCol: String, weight: Column,
       sortExprs: Seq[Column], nParts: Int): (DataFrame, Long) = {
-    val s = df.sparkSession
     val keyed = df
       .repartitionByRange(nParts, sortExprs: _*)
       .withColumn("_gr_pid", spark_partition_id())

@@ -26,9 +26,7 @@ import graft.Tables._
   * (min label / min id), so fixed-round outputs are exact and the
   * DuckDB oracles replay the same rounds as unrolled CTEs.
   */
-object GraphQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphQueries extends graft.QueryModule {
   /** Undirected edge list (both orientations) of the ≥0.5-jaccard
     * document similarity graph, pinned once per query. */
   private[operators] def simEdges(s: SparkSession, d: String): DataFrame = {

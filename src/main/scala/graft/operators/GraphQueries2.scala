@@ -25,9 +25,7 @@ import graft.Tables._
   * floor-quantized to integer nano-units BEFORE the per-pair sum, so
   * the score is an exact integer at any summation order.
   */
-object GraphQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphQueries2 extends graft.QueryModule {
   private val K_CORE = 3
   private val ROUNDS = 4
   private val HITS_ROUNDS = 3

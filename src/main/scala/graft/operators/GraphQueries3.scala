@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Round-14 graph addition: k-truss decomposition on the co-purchase
@@ -27,9 +27,7 @@ import org.apache.spark.sql.functions._
   * the output, replayed in DuckDB as an unrolled CTE; a round that
   * removes nothing certifies the fixed point early. All counts exact.
   */
-object GraphQueries3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphQueries3 extends graft.QueryModule {
   private val K_TRUSS = 4 // keep edges with >= K_TRUSS - 2 triangles
   private val ROUNDS = 3
 

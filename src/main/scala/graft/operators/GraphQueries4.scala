@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -32,9 +32,7 @@ import graft.Tables._
   * pointer-checkpointed so lineage stays one hop deep; the coverage
   * report is two keyed aggregates over the rec table.
   */
-object GraphQueries4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphQueries4 extends graft.QueryModule {
   /** Hop budget per sweep (similarity components are shallow; the
     * sweep reports a lower bound by construction either way — and the
     * output's `frontier_exhausted` flag records WHICH kind of bound:

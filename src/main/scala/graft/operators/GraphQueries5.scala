@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -33,9 +32,7 @@ import graft.Tables._
   * component labels. Nothing touches the corpus after the shared
   * pair substrate.
   */
-object GraphQueries5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object GraphQueries5 extends graft.QueryModule {
   /** Katz attenuation rounds (α=0.2 → a 5-hop walk carries ≈3e-4 of
     * a direct edge's weight — below milli resolution, so more rounds
     * change nothing visible). */

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.GraftExpressions
-import java.nio.file.{Files, Paths, Path}
+import java.nio.file.{Files, Path}
 
 /** The reference pipeline (SURVEY.md §2.1/§2.2), rebuilt Spark-first.
   *

@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
-import graft.OracleParity._
 
 /** The reference's operator semantics (O5–O7, D1–D3) exercised on the
   * driver's `events` table so they get a DuckDB oracle twin (the JSONL
@@ -12,9 +10,7 @@ import graft.OracleParity._
   * `value` plays the role of the sensor temperature; the JSON `props.k`
   * plays the humidity being validated.
   */
-object IotQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object IotQueries extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // D1 (threshold filter) + O6 (conditional °F projection) + D2
     // (dimension lookup: a derived device→location dim, broadcast).

@@ -24,9 +24,7 @@ import graft.Tables._
   *    rows-only. Queries broadcast; per-partition top-k merges k-row
   *    sides (TakeOrdered shape under the per-query window).
   */
-object MlQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries extends graft.QueryModule {
   private val K = 8      // clusters
   private val DIMS = 64
   private val TOPK = 5

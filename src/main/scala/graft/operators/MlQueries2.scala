@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,9 +22,7 @@ import graft.OracleParity._
   * over exact integers rendered with format_string — IEEE determinism
   * makes them hash-exact against DuckDB at any partitioning.
   */
-object MlQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries2 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   /** 16 deterministic md5-derived tree constants for the isolation

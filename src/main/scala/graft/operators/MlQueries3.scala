@@ -25,9 +25,7 @@ import graft.Tables._
   * partial sums (9 sufficient statistics); the weight row broadcasts.
   * Nothing else exists — no per-row state, no driver data.
   */
-object MlQueries3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries3 extends graft.QueryModule {
   /** z and σ over integer micro-weights w1/w2/b — shared text. */
   private val zE =
     "((CAST(w1 AS DOUBLE) * x1 + CAST(w2 AS DOUBLE) * x2 + CAST(b AS DOUBLE)) / 1e6)"

@@ -36,9 +36,7 @@ import graft.Tables._
   * aggregate reduces each task to 28 rows — the same shape at any
   * corpus size, no keyed shuffle of the fact table anywhere.
   */
-object MlQueries4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries4 extends graft.QueryModule {
   /** The (x1, x2, y) feature frame (MlQueries3's features, local copy —
     * discount cents −5 ∈ [−5,5], quantity −25 ∈ [−24,25], y = returned). */
   private def features(s: SparkSession, d: String): DataFrame =

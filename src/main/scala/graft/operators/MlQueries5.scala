@@ -37,9 +37,7 @@ import graft.Tables._
   * corpus scan through a 4-way stack generator into a ≤62-cell
   * aggregate; marginals ride cell-sized windows.
   */
-object MlQueries5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries5 extends graft.QueryModule {
   /** The (x1, x2, y) feature frame (shared with MlQueries4). */
   private def features(s: SparkSession, d: String): DataFrame =
     // r20: fanOutScan keyed on the ROW IDENTITY (never a feature key —
@@ -557,7 +555,6 @@ object MlQueries5 {
     // quadratics — products ≤ n² stay exact doubles past 100×),
     // floored to milli at output.
     "ml_confusion_metrics" -> ((s, d) => {
-      import s.implicits._
       val cm = lineitem(s, d).selectExpr(
           "CASE WHEN l_quantity > 25 THEN 1 ELSE 0 END AS yhat",
           "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -47,9 +47,7 @@ import graft.Tables._
   * FOREVER, linear in users); the deviation table is item-pair-keyed
   * and every join is a keyed equi-join.
   */
-object MlQueries6 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries6 extends graft.QueryModule {
   /** Items kept per user for pair enumeration (total order: rating
     * desc, partkey asc — deterministic under ties). */
   private val CapK = 16

@@ -36,9 +36,7 @@ import graft.OracleParity._
   * trick) — every later stage is cell-grid-sized; the bandit folds a
   * calendar-sized array after one keyed daily aggregate.
   */
-object MlQueries7 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries7 extends graft.QueryModule {
   /** LOF neighborhood size. */
   private val LofK = 3
 

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.OracleParity._
@@ -26,9 +25,7 @@ import graft.OracleParity._
   * aggregate + a 100-pair audit; the J sweep is one cell-census
   * aggregate ×14 (the decision-stump collapse).
   */
-object MlQueries8 {
-  type Q = (SparkSession, String) => DataFrame
-
+object MlQueries8 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     "samp_borda_fusion" -> ((s, d) => {
       import s.implicits._

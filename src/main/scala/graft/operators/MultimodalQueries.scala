@@ -16,7 +16,7 @@ import graft.Tables._
   * The `documents` table stands in as the payload source (text bytes as
   * the blob) so the queries stay oracle-checkable.
   */
-object MultimodalQueries {
+object MultimodalQueries extends graft.QueryModule {
 
   private val payloadMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
@@ -30,7 +30,7 @@ object MultimodalQueries {
     * is decode→feature→rollup), so sharing it is the dedup-substrate /
     * bucketed-warehouse attribution discipline: each mm_* query now
     * times its own decode plan, and the one-time synth cost is paid at
-    * Bench warm-up. ProfPhash measured the split at sf0.1: encode
+    * Bench warm-up. A per-stage profile at sf0.1 split it: encode
     * ≈3.3 s, decode+hash ≈2.2 s, rollup ≈0.45 s. */
   private[graft] def patternPayloads(s: SparkSession, d: String): DataFrame =
     payloadMemo.computeIfAbsent((s, d), { _ =>
@@ -50,7 +50,6 @@ object MultimodalQueries {
           .repartition(s.sparkContext.defaultParallelism, $"doc_id"))
         .localCheckpoint()
     })
-  type Q = (SparkSession, String) => DataFrame
 
   val queries: Map[String, Q] = Map(
     // Opaque binary + typed metadata: byte length, checksum, and

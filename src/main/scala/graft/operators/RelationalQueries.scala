@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -19,9 +18,7 @@ import graft.OracleParity._
   * Scale design notes are on each query: what shuffles, what broadcasts,
   * what pushes down.
   */
-object RelationalQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // ------------------------------------------------------------------
     // q01: TPC-H Q1-style pricing summary. One shuffle (partial+final
@@ -411,7 +408,6 @@ object RelationalQueries {
     // disambiguate the null grouping rows). Same Expand+agg plan as
     // rollup/cube.
     "q31_grouping_sets" -> ((s, d) => {
-      import s.implicits._
       lineitem(s, d).createOrReplaceTempView("lineitem_v")
       s.sql("""
         SELECT l_returnflag, l_linestatus,
@@ -510,7 +506,6 @@ object RelationalQueries {
     // price) — Catalyst decorrelates it into an aggregate + join; the
     // mean is decimal-exact on both engines.
     "q37_corr_subquery" -> ((s, d) => {
-      import s.implicits._
       part(s, d).createOrReplaceTempView("part_v")
       s.sql("""
         SELECT p_partkey, p_brand, p_retailprice FROM part_v p

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -22,9 +21,7 @@ import graft.OracleParity._
   * to integers per-row BEFORE summation so the sum itself never
   * touches floats.
   */
-object RelationalQueries10 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries10 extends graft.QueryModule {
   private val D38 = DecimalType(38, 0)
 
   /** Money column as exact integer cents, decimal-38 typed. */

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -20,9 +19,7 @@ import graft.OracleParity._
   * per-row divisions of exact integers (q169's slopes — the same
   * dividend/divisor pair yields the same double on both engines).
   */
-object RelationalQueries11 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries11 extends graft.QueryModule {
   private val D38 = DecimalType(38, 0)
   // factor width for decimal×decimal products: DuckDB's multiply rule
   // is width₁+width₂ ≤ 38 (it ERRORS above, where Spark caps at 38) —

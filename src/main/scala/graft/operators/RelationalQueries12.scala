@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -20,9 +20,7 @@ import graft.OracleParity._
   * D19-factor decimal products, and r renders once through an
   * operand-identical double tree (the graph_assortativity idiom).
   */
-object RelationalQueries12 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries12 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
   private val LAG = 7
 

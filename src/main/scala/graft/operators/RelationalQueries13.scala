@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,9 +22,7 @@ import graft.OracleParity._
   * residuals are floor-quantized to integer cents before the decimal
   * sum-of-squares, so both engines divide identical exact operands.
   */
-object RelationalQueries13 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries13 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   val queries: Map[String, Q] = Map(

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -21,9 +20,7 @@ import graft.OracleParity._
   * group-order never leaks into results; single-row trees are shared
   * verbatim with the DuckDB oracles.
   */
-object RelationalQueries14 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries14 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   // z_{0.975} + z_{0.80} for the classic two-sided 5% / 80%-power pair

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -37,9 +36,7 @@ import graft.OracleParity._
   * (a longer history changes the estimand, not the cost). Page–Hinkley
   * is a prefix scan over the day series.
   */
-object RelationalQueries15 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries15 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   /** χ²(df=7) 95% critical value ×1e6 — a fixed distribution constant

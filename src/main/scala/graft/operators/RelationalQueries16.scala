@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
@@ -38,9 +37,7 @@ import graft.OracleParity._
   * (≈ $40M/day on a 2400-day calendar × 1e6 safety; the width note of
   * the q231 family).
   */
-object RelationalQueries16 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries16 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   /** DFT periods probed by q241 (days). */

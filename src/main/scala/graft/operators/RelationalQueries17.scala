@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -42,9 +42,7 @@ import graft.OracleParity._
   * aggregate absorbs the growth map-side. SPRT cumulative sums ride
   * the established day-sized global window idiom.
   */
-object RelationalQueries17 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries17 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   /** q248 decay factors (1−λ)^{2t} = 0.64^t for t = 1..89 as EXACT

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -43,9 +42,7 @@ import graft.Tables._
   * the template pair join is calendar²-bounded (the q242/q233 broadcast
   * pair-frame idiom) and volume-invariant.
   */
-object RelationalQueries18 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries18 extends graft.QueryModule {
   /** Fixed period grid for the period-gram (q256): sub-weekly through
     * seasonal. The trig factors are SCALA-PRECOMPUTED micro literals
     * (the q241 no-query-time-libm discipline), shipped as a 457-row

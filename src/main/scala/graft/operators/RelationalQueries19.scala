@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -54,9 +53,7 @@ import graft.OracleParity._
   * two-pass GlobalRank (no global window); q268/q269 aggregate to
   * value-table / moment scalars in one pass.
   */
-object RelationalQueries19 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries19 extends graft.QueryModule {
   private val D38 = DecimalType(38, 0)
 
   /** Elo expectation E_milli(d) for rating gap d = r_self − r_opp,

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -18,9 +17,7 @@ import graft.OracleParity._
   * sums, micros/fmtTs for timestamps, no order-dependent double
   * aggregation.
   */
-object RelationalQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries2 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // q38: FULL OUTER join of two pre-aggregated sides with genuinely
     // disjoint key coverage (narrow filters). Aggregate-before-join keeps
@@ -52,7 +49,6 @@ object RelationalQueries2 {
     // rewrites to left-semi / null-aware anti join (keys are non-null
     // here, so NOT IN stays sane).
     "q40_in_subquery" -> ((s, d) => {
-      import s.implicits._
       orders(s, d).createOrReplaceTempView("orders_v40")
       customer(s, d).createOrReplaceTempView("customer_v40")
       s.sql("""
@@ -282,7 +278,6 @@ object RelationalQueries2 {
     // decorrelates both into semi / anti joins (no per-row subquery
     // execution, unlike the reference's would-be loop).
     "q58_exists" -> ((s, d) => {
-      import s.implicits._
       orders(s, d).createOrReplaceTempView("orders_v58")
       customer(s, d).createOrReplaceTempView("customer_v58")
       s.sql("""
@@ -299,7 +294,6 @@ object RelationalQueries2 {
     // line items by quantity; Catalyst decorrelates the limit into a
     // ranked window, so it runs as one pass, not a loop.
     "q59_lateral_topk" -> ((s, d) => {
-      import s.implicits._
       orders(s, d).createOrReplaceTempView("orders_v59")
       lineitem(s, d).createOrReplaceTempView("lineitem_v59")
       s.sql("""

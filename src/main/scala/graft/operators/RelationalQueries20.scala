@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -34,9 +34,7 @@ import graft.OracleParity._
   * frames; q273 ranks via GlobalRank (no global window) and the
   * migration census is 25 cells.
   */
-object RelationalQueries20 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries20 extends graft.QueryModule {
   /** Truncation depth for the Q-power series (bp⁸ ≈ 4 hops of typical
     * mass — contributions beyond are below milli resolution for these
     * chains; the truncation is part of the operator contract). */

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -42,9 +41,7 @@ import graft.OracleParity._
   * per event type) or ≤50-row distinct-value tables; q278's order
   * statistics are a k-limited TakeOrdered over the customer aggregate.
   */
-object RelationalQueries21 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries21 extends graft.QueryModule {
   private val D38 = DecimalType(38, 0)
   private val HillK = 100
 

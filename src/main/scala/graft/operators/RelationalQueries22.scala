@@ -30,9 +30,7 @@ import graft.OracleParity.dec
   *    rates, expectation milli-quantized per stratum before the
   *    cross-stratum sum.
   */
-object RelationalQueries22 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries22 extends graft.QueryModule {
   private val D38 = DecimalType(38, 0)
 
   /** Money column as exact integer cents, decimal-38 typed. */

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables._
@@ -10,9 +9,7 @@ import graft.OracleParity._
   * and ordered funnel analysis — the two operator shapes CDC and
   * product pipelines run constantly on event streams.
   */
-object RelationalQueries3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries3 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // SCD TYPE-2 dimension history: each user's purchase stream becomes
     // versioned validity intervals — version = rank of the change row,

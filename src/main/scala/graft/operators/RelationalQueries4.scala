@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.OracleParity._
@@ -10,9 +9,7 @@ import graft.OracleParity._
   * arithmetic, and URL parsing/encoding — three operator families a
   * warehouse user expects that the suite didn't yet exercise.
   */
-object RelationalQueries4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries4 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Recursive CTE: generate the full month calendar between the first
     // and last order date (gap-free even if a month has no orders),
@@ -127,7 +124,6 @@ object RelationalQueries4 {
     // distinct users, so the oracle compares the estimates against
     // DuckDB's exact distinct counts at full hash precision.
     "q79_theta_sketch_ops" -> ((s, d) => {
-      import s.implicits._
       events(s, d)
         .agg(
           expr("theta_sketch_agg(CASE WHEN event_type = 'click' THEN user_id END)")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -18,9 +18,7 @@ import graft.OracleParity._
   * analytics / data-quality operator families a warehouse or curation
   * user reaches for that the suite didn't yet cover.
   */
-object RelationalQueries5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries5 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Rolling z-score anomaly detection over the event stream: each
     // reading is scored against the mean/stddev of the PRECEDING 20

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -11,9 +10,7 @@ import graft.OracleParity._
   * test — the remaining time-series / sequence / statistics shapes a
   * warehouse user reaches for that the suite didn't yet cover.
   */
-object RelationalQueries6 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries6 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Exponentially weighted moving average over each event-type
     // series: a 20-row suffix window collected in frame order and

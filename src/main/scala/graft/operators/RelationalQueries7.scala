@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -13,9 +13,7 @@ import graft.OracleParity._
   * GlobalRank prefix machinery — the remaining statistics / BI /
   * warehouse-maintenance shapes the suite didn't yet cover.
   */
-object RelationalQueries7 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries7 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // MULTIPLE linear regression (price ~ quantity + discount) per
     // returnflag — two regressors via the 2×2 normal equations in

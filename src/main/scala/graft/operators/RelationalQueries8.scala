@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -16,9 +16,7 @@ import graft.OracleParity._
   * combinable), doubles only at the very end through identical
   * expression trees on both engines, rendered with format_string.
   */
-object RelationalQueries8 {
-  type Q = (SparkSession, String) => DataFrame
-
+object RelationalQueries8 extends graft.QueryModule {
   private val D38 = DecimalType(38, 0)
 
   /** Money column as exact integer cents, decimal-38 typed (overflow-

@@ -17,9 +17,7 @@ import graft.Tables._
   * It is also exactly oracle-expressible, unlike `df.sample`'s
   * partition-seeded RNG.
   */
-object SamplingQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object SamplingQueries extends graft.QueryModule {
   /** First two hex chars of md5(key) — a uniform 0..255 bucket as text;
     * `bucket < 'xx'` selects a deterministic fraction. */
     private def hashBucket(key: Column): Column =

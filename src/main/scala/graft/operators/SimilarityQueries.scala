@@ -17,9 +17,7 @@ import graft.functions.VectorFunctions._
   * hash-verifies the ANN quality invariant instead of recording a
   * rows-only pass.
   */
-object SimilarityQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object SimilarityQueries extends graft.QueryModule {
   private val K = 5
   private val N_QUERIES = 5
 

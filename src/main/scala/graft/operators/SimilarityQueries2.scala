@@ -41,9 +41,7 @@ import graft.Tables._
   * NProbe/[[SemCells]] of the data (bucket pruning), broadcasts a
   * query-batch-sized probe set, and shuffles only (q_id, candidate)
   * rows for its own top-k. */
-object SimilarityQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object SimilarityQueries2 extends graft.QueryModule {
   /** Must match [[DedupQueries5]]'s cell count (the index being
     * persisted) — seeds are vec_id < SemCells. */
   private val SemCells = 8

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.OracleParity._
-import graft.streaming.{Streams, UserEvent, UserProfile}
+import graft.streaming.{Streams, UserEvent}
 
 /** Structured Streaming operators surfaced through the correctness gate
   * (SURVEY.md §2.3 streaming rows): each entry drives a real
@@ -26,9 +26,7 @@ import graft.streaming.{Streams, UserEvent, UserProfile}
   * watermark-bounded, so executor memory stays flat on an unbounded
   * stream.
   */
-object StreamingQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object StreamingQueries extends graft.QueryModule {
   /** Every streaming gate runs on an ISOLATED child session: shared
     * SparkContext (and block-manager/cache), but its own SQLConf —
     * so the streaming-specific settings (state-store partition count,
@@ -51,18 +49,16 @@ object StreamingQueries {
     // appends the delta log instead of snapshotting the full SST set
     // to the checkpoint (snapshots still happen, asynchronously in
     // maintenance). At gate scale this measured a WASH (interleaved
-    // A/B, ProfStreamAB: −0.11…+0.24 s minima over 7 stateful
-    // entries — the 2–5-batch runs hold trivial state, so snapshot
-    // upload was never the cost); it is kept ON as the production
-    // posture, where per-batch snapshot cost grows with STATE SIZE
-    // while changelog cost grows with the DELTA (StreamBench has run
-    // with it since r19 and gates sustained rate on it). A no-op for
-    // the HDFS-provider entries. `graft.no.changelog` is
-    // ProfStreamAB's A/B hook.
-    if (!sys.props.contains("graft.no.changelog"))
-      ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
+    // on/off A/B: −0.11…+0.24 s minima over 7 stateful entries — the
+    // 2–5-batch runs hold trivial state, so snapshot upload was never
+    // the cost); it is kept ON as the production posture, where
+    // per-batch snapshot cost grows with STATE SIZE while changelog
+    // cost grows with the DELTA (StreamBench has run with it since r19
+    // and gates sustained rate on it). A no-op for the HDFS-provider
+    // entries.
+    ss.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
+      "true")
     ss
   }
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.TextFunctions._
@@ -12,9 +11,7 @@ import graft.functions.TextFunctions._
   * All pure Catalyst expressions — each scales as a narrow map over the
   * corpus (no shuffle except the final stats aggregations).
   */
-object TextQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries extends graft.QueryModule {
   private val stopList = Seq("the", "a", "of", "and", "to", "in", "is")
 
   val queries: Map[String, Q] = Map(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -57,9 +57,7 @@ import graft.Tables._
   * CTEs (the graph_ktruss lesson — DuckDB inlines CTEs per
   * reference, so every round state must materialize).
   */
-object TextQueries10 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries10 extends graft.QueryModule {
   /** Merge rounds trained (and unrolled in the oracle). */
   private[operators] val BpeRounds = 8
 

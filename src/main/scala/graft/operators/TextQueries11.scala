@@ -58,9 +58,7 @@ import graft.Tables._
   * sorts globally: the argmax is a per-word window over ≤ 108 rows
   * and each prune is a TakeOrdered over the piece census.
   */
-object TextQueries11 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries11 extends graft.QueryModule {
   private[operators] val MaxW = 8
   private[operators] val MaxPiece = 4
   private[operators] val SeedV = 24

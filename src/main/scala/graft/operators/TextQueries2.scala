@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.functions.TextFunctions.tokens
@@ -25,9 +24,7 @@ import graft.functions.TextFunctions.tokens
   * micro-units per (doc,term) before any summation, so the score sum
   * is order-independent and map-side combinable at any corpus size.
   */
-object TextQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries2 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     // Chunk-level boilerplate scrub. One token-array scan builds the
     // chunk table WITHOUT a posexplode (transform over an index

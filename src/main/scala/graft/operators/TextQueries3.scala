@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -27,9 +26,7 @@ import graft.functions.TextFunctions.tokens
   * K-sized, not corpus-sized. The dataset card is one partial+final
   * aggregate over a single corpus scan.
   */
-object TextQueries3 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries3 extends graft.QueryModule {
   private val NQ = 3       // query documents: doc_id < NQ
   private val POOL = 50    // per-ranking candidate depth
   private val TOPK = 10    // fused results per query

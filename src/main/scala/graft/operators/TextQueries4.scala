@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -20,9 +19,7 @@ import graft.Tables._
   * and phrase reconstruction sorts by position on both engines — no
   * floats anywhere.
   */
-object TextQueries4 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries4 extends graft.QueryModule {
   private val stop = Seq("the", "a", "of", "and", "to", "in", "is")
   private val stopSql = stop.map(s => s"'$s'").mkString(", ")
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
@@ -22,9 +21,7 @@ import graft.Tables._
   * regression coordinates are floor-quantized to nano-integers before
   * the decimal OLS sums.
   */
-object TextQueries5 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries5 extends graft.QueryModule {
   private val D19 = DecimalType(19, 0)
 
   /** x·ln(x) with the 0·ln0 = 0 convention — shared text so Spark and

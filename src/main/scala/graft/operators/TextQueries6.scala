@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -24,9 +23,7 @@ import graft.Tables._
   * distinct is per (doc, window, token), partitioned by doc). Kappa is
   * one corpus scan to a classes² matrix.
   */
-object TextQueries6 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries6 extends graft.QueryModule {
   private val W = 25
 
   /** The text_lang_id sniff rule as one shared SQL string (also rater

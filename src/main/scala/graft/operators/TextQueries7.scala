@@ -37,9 +37,7 @@ import graft.Tables._
   * Fleiss is one corpus scan to a doc-sized 3-label frame, then
   * category-sized aggregates.
   */
-object TextQueries7 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries7 extends graft.QueryModule {
   private val SCALE = 1000000000000L
   private val ROUNDS = 4
   private val VOCAB = 50

@@ -37,9 +37,7 @@ import graft.functions.TextFunctions.tokens
   * spectrum frame is bounded by the most frequent token's count, and
   * the statistics are single partial+final sums over it.
   */
-object TextQueries8 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries8 extends graft.QueryModule {
   /** Spark-side spectrum (m, v) builder shared by both queries. */
   private def spectrum(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
 
@@ -24,9 +23,7 @@ import graft.Tables._
   * Scale: both are one explode + keyed aggregates (term- and
   * doc-keyed); the top-20 cut is a TakeOrdered, never a global sort.
   */
-object TextQueries9 {
-  type Q = (SparkSession, String) => DataFrame
-
+object TextQueries9 extends graft.QueryModule {
   val queries: Map[String, Q] = Map(
     "text_fano_factor" -> ((s, d) => {
       import s.implicits._

@@ -34,9 +34,7 @@ import graft.OracleParity._
   * express: snapshot isolation under concurrent commits, optimistic-
   * concurrency conflicts, and merge's file-level pruning.
   */
-object AcidQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object AcidQueries extends graft.QueryModule {
   /** The merge source, shared by the chain builder and (in SQL) the
     * oracles: original customers with c_custkey % 7 = 0, +100.00. */
   private def mergeSource(s: SparkSession, d: String): DataFrame = {

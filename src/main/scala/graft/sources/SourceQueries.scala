@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.Tables._
 import graft.OracleParity._
@@ -15,9 +15,7 @@ import graft.OracleParity._
   * partitioned parquet all ride the same `DataFrameReader`/`Writer`
   * surface, which is what makes them `s3a://`-ready unchanged.
   */
-object SourceQueries {
-  type Q = (SparkSession, String) => DataFrame
-
+object SourceQueries extends graft.QueryModule {
   private def tmp(name: String): String =
     s"${sys.props("java.io.tmpdir")}/graft_roundtrip/$name"
 

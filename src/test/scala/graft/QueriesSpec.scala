@@ -11,77 +11,30 @@ class QueriesSpec extends SparkSuite {
   }
 
   test("no query name collides across operator files (Map ++ would silently drop one)") {
-    import graft.operators._
-    val files = Seq(
-      "RelationalQueries" -> RelationalQueries.queries.keySet,
-      "RelationalQueries2" -> RelationalQueries2.queries.keySet,
-      "StreamingQueries" -> StreamingQueries.queries.keySet,
-      "SamplingQueries" -> SamplingQueries.queries.keySet,
-      "SourceQueries" -> graft.sources.SourceQueries.queries.keySet,
-      "AcidQueries" -> graft.sources.AcidQueries.queries.keySet,
-      "IotQueries" -> IotQueries.queries.keySet,
-      "TextQueries" -> TextQueries.queries.keySet,
-      "DedupQueries" -> DedupQueries.queries.keySet,
-      "SimilarityQueries" -> SimilarityQueries.queries.keySet,
-      "MultimodalQueries" -> MultimodalQueries.queries.keySet,
-      "AsOfJoin" -> AsOfJoin.queries.keySet,
-      "RelationalQueries3" -> RelationalQueries3.queries.keySet,
-      "RelationalQueries4" -> RelationalQueries4.queries.keySet,
-      "RelationalQueries5" -> RelationalQueries5.queries.keySet,
-      "RelationalQueries6" -> RelationalQueries6.queries.keySet,
-      "RelationalQueries7" -> RelationalQueries7.queries.keySet,
-      "RelationalQueries8" -> RelationalQueries8.queries.keySet,
-      "RelationalQueries9" -> RelationalQueries9.queries.keySet,
-      "RelationalQueries10" -> RelationalQueries10.queries.keySet,
-      "GraphQueries" -> GraphQueries.queries.keySet,
-      "GraphQueries2" -> GraphQueries2.queries.keySet,
-      "MlQueries" -> MlQueries.queries.keySet,
-      "TextQueries2" -> TextQueries2.queries.keySet,
-      "TextQueries3" -> TextQueries3.queries.keySet,
-      "RelationalQueries11" -> RelationalQueries11.queries.keySet,
-      "MlQueries2" -> MlQueries2.queries.keySet,
-      "RelationalQueries12" -> RelationalQueries12.queries.keySet,
-      "TextQueries4" -> TextQueries4.queries.keySet,
-      "RelationalQueries13" -> RelationalQueries13.queries.keySet,
-      "TextQueries5" -> TextQueries5.queries.keySet,
-      "RelationalQueries14" -> RelationalQueries14.queries.keySet,
-      "DedupQueries2" -> DedupQueries2.queries.keySet,
-      "RelationalQueries15" -> RelationalQueries15.queries.keySet,
-      "DedupQueries3" -> DedupQueries3.queries.keySet,
-      "MlQueries3" -> MlQueries3.queries.keySet,
-      "TextQueries6" -> TextQueries6.queries.keySet,
-      "RelationalQueries16" -> RelationalQueries16.queries.keySet,
-      "MlQueries4" -> MlQueries4.queries.keySet,
-      "FeatureQueries" -> FeatureQueries.queries.keySet,
-      "RelationalQueries17" -> RelationalQueries17.queries.keySet,
-      "MlQueries5" -> MlQueries5.queries.keySet,
-      "GraphQueries3" -> GraphQueries3.queries.keySet,
-      "TextQueries7" -> TextQueries7.queries.keySet,
-      "RelationalQueries18" -> RelationalQueries18.queries.keySet,
-      "MlQueries6" -> MlQueries6.queries.keySet,
-      "DedupQueries4" -> DedupQueries4.queries.keySet,
-      "TextQueries8" -> TextQueries8.queries.keySet,
-      "GraphQueries4" -> GraphQueries4.queries.keySet,
-      "GraphQueries5" -> GraphQueries5.queries.keySet,
-      "RelationalQueries19" -> RelationalQueries19.queries.keySet,
-      "MlQueries7" -> MlQueries7.queries.keySet,
-      "RelationalQueries20" -> RelationalQueries20.queries.keySet,
-      "TextQueries9" -> TextQueries9.queries.keySet,
-      "RelationalQueries21" -> RelationalQueries21.queries.keySet,
-      "MlQueries8" -> MlQueries8.queries.keySet,
-      "TextQueries10" -> TextQueries10.queries.keySet,
-      "TextQueries11" -> TextQueries11.queries.keySet,
-      "DedupQueries5" -> DedupQueries5.queries.keySet,
-      "DedupQueries6" -> DedupQueries6.queries.keySet,
-      "SimilarityQueries2" -> SimilarityQueries2.queries.keySet,
-      "CurationQueries" -> CurationQueries.queries.keySet,
-      "RelationalQueries22" -> RelationalQueries22.queries.keySet)
-    val dupes = files.flatMap { case (f, ks) => ks.map(_ -> f) }
-      .groupBy(_._1).filter(_._2.size > 1)
-    assert(dupes.isEmpty, s"query keys declared in multiple files: ${
-      dupes.map { case (k, fs) => s"$k in ${fs.map(_._2).mkString("+")}" }.mkString(", ")}")
-    assert(files.map(_._2.size).sum === SparkEntry.queries.size,
+    val modules = SparkEntry.modules
+    assert(modules.distinct.size === modules.size, "a module is listed twice")
+    val (queries, oracles) = QueryModule.merge(modules)
+    assert(modules.map(_.queries.size).sum === queries.size,
       "merged queries map lost entries to a key collision")
+    assert(modules.map(_.oracles.size).sum === oracles.size,
+      "merged oracle map lost entries to a key collision")
+    assert(queries.keySet === SparkEntry.queries.keySet)
+  }
+
+  test("the registry merge rejects a twice-declared query or oracle and an oracle outside its module") {
+    def fault(modules: QueryModule*): String =
+      intercept[IllegalStateException](QueryModule.merge(modules)).getMessage
+    val dupQuery = fault(QueriesSpec.WithOracle, QueriesSpec.QueryOnly)
+    assert(dupQuery.contains("query 'x'") &&
+      dupQuery.contains("WithOracle") && dupQuery.contains("QueryOnly"), dupQuery)
+    val dupOracle = fault(QueriesSpec.WithOracle, QueriesSpec.StrayOracle)
+    assert(dupOracle.contains("oracle 'x'") &&
+      dupOracle.contains("WithOracle") && dupOracle.contains("StrayOracle"), dupOracle)
+    val stray = fault(QueriesSpec.QueryOnly, QueriesSpec.StrayOracle)
+    assert(stray.contains("oracle 'x'") &&
+      stray.contains("StrayOracle") && stray.contains("QueryOnly"), stray)
+    val (queries, oracles) = QueryModule.merge(Seq(QueriesSpec.WithOracle))
+    assert(queries.keySet === Set("x") && oracles === Map("x" -> "SELECT 1 AS x"))
   }
 
   test("flagship entry returns rows") {
@@ -123,5 +76,21 @@ class QueriesSpec extends SparkSuite {
       }
       assert(df.count() > 0, s"$name returned zero rows")
     }
+  }
+}
+
+object QueriesSpec {
+  private def one(s: org.apache.spark.sql.SparkSession, d: String) = s.range(1).toDF("x")
+  object WithOracle extends QueryModule {
+    val queries = Map[String, Q]("x" -> one)
+    val oracles = Map("x" -> "SELECT 1 AS x")
+  }
+  object QueryOnly extends QueryModule {
+    val queries = Map[String, Q]("x" -> one)
+    val oracles = Map.empty[String, String]
+  }
+  object StrayOracle extends QueryModule {
+    val queries = Map[String, Q]("y" -> one)
+    val oracles = Map("x" -> "SELECT 1 AS x")
   }
 }
